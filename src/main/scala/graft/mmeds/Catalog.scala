@@ -11,13 +11,6 @@ trait Catalog {
   def append(name: String, df: DataFrame): Unit
   def overwrite(name: String, df: DataFrame): Unit
   def tableNames: Seq[String]
-
-  /** Require a table, empty-safe: callers building views need a frame
-    * even when nothing was ingested for a table yet. */
-  def tableOrEmpty(spark: SparkSession, name: String,
-      like: DataFrame): DataFrame =
-    table(name).getOrElse(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], like.schema))
 }
 
 /** Test/ephemeral catalog: plain map of DataFrames. */
@@ -36,7 +29,22 @@ class InMemoryCatalog extends Catalog {
   * `user_id ∈ {uid, public}` then resolves as PARTITION PRUNING — on a
   * 1000-executor cluster a user's session reads only its own partitions,
   * never scanning other tenants' data. At larger scale the same seam
-  * registers metastore tables; the layout is identical. */
+  * registers metastore tables; the layout is identical.
+  *
+  * Resolved scans are kept per table. Building one lists the partition
+  * directories and runs a job to merge every file footer, so `table`
+  * reuses the frame it built last while the table's `_graft_schema.json`
+  * keeps its (modification time, length) stamp: every `append` and
+  * `overwrite`, through any catalog on `root`, rewrites that file last,
+  * so one stat per call tells whether the frame is current (a write by
+  * another catalog that keeps the file's length inside one mtime tick of
+  * the filesystem goes unseen until the next write). A write through
+  * this instance also drops its table's entry. Two calls with no
+  * write between them return the same frame, so a view may join a table
+  * and select from it by column reference. The frames are shared by
+  * every user and session on this catalog; row-level security stays a
+  * filter that `Engine.Session.resolve` adds per call. A table without a
+  * schema file (not written through this class) is re-read per call. */
 class ParquetCatalog(spark: SparkSession, root: String) extends Catalog {
   import org.apache.hadoop.fs.Path
   import org.apache.spark.sql.functions.{col, lit}
@@ -62,18 +70,25 @@ class ParquetCatalog(spark: SparkSession, root: String) extends Catalog {
     try out.write(df.schema.json.getBytes("UTF-8")) finally out.close()
   }
 
-  private def savedSchema(name: String): Option[StructType] = {
-    val f = schemaFile(name)
-    val filesystem = fs(path(name))
-    if (!filesystem.exists(f)) None
-    else {
-      val in = filesystem.open(f)
+  private def savedSchema(name: String): Option[StructType] =
+    try {
+      val in = fs(path(name)).open(schemaFile(name))
       try {
         val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
         Some(DataType.fromJson(txt).asInstanceOf[StructType])
       } finally in.close()
-    }
-  }
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** (modification time, length) of the table's schema file. */
+  private def stamp(name: String): Option[(Long, Long)] =
+    try {
+      val st = fs(path(name)).getFileStatus(schemaFile(name))
+      Some((st.getModificationTime, st.getLen))
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  private final case class Scan(stamp: (Long, Long), frame: DataFrame)
+  private val scans =
+    new java.util.concurrent.ConcurrentHashMap[String, Scan]()
 
   /** Read back with `mergeSchema` so files written before a schema
     * evolution (an append that added columns) still load — the scan's
@@ -83,27 +98,37 @@ class ParquetCatalog(spark: SparkSession, root: String) extends Catalog {
     * older files surface as null via the merged scan. A column that
     * only ever existed in older files is dropped — last-writer-wins is
     * the catalog's schema contract. */
-  def table(name: String): Option[DataFrame] =
-    if (!exists(name)) None
-    else {
-      val raw = spark.read.option("mergeSchema", "true").parquet(path(name))
-      Some(savedSchema(name) match {
-        case Some(s) =>
-          val present = raw.columns.toSet
-          raw.select(s.fields.toIndexedSeq.map { f =>
-            if (present.contains(f.name))
-              col(f.name).cast(f.dataType).as(f.name)
-            else lit(null).cast(f.dataType).as(f.name)
-          }: _*)
-        case _ => raw
-      })
+  private def scan(name: String): DataFrame = {
+    val raw = spark.read.option("mergeSchema", "true").parquet(path(name))
+    savedSchema(name) match {
+      case Some(s) =>
+        val present = raw.columns.toSet
+        raw.select(s.fields.toIndexedSeq.map { f =>
+          if (present.contains(f.name))
+            col(f.name).cast(f.dataType).as(f.name)
+          else lit(null).cast(f.dataType).as(f.name)
+        }: _*)
+      case _ => raw
     }
+  }
+
+  /** Concurrent misses on one stamp keep the first frame stored, so
+    * every caller of that stamp gets the same one. */
+  def table(name: String): Option[DataFrame] = stamp(name) match {
+    case Some(s) =>
+      val hit = scans.get(name)
+      if (hit != null && hit.stamp == s) Some(hit.frame)
+      else Some(scans.merge(name, Scan(s, scan(name)),
+        (old, built) => if (old.stamp == built.stamp) old else built).frame)
+    case None => if (exists(name)) Some(scan(name)) else None
+  }
 
   def append(name: String, df: DataFrame): Unit = {
     val w = df.write.mode(SaveMode.Append)
     (if (df.columns.contains("user_id")) w.partitionBy("user_id") else w)
       .parquet(path(name))
     saveSchema(name, df)
+    scans.remove(name)
   }
 
   def overwrite(name: String, df: DataFrame): Unit = {
@@ -116,6 +141,7 @@ class ParquetCatalog(spark: SparkSession, root: String) extends Catalog {
     filesystem.delete(new Path(path(name)), true)
     filesystem.rename(new Path(tmp), new Path(path(name)))
     saveSchema(name, df)
+    scans.remove(name)
   }
 
   def tableNames: Seq[String] = {

@@ -39,20 +39,24 @@ class Engine(val spark: SparkSession, val catalog: Catalog) {
     def views: Views = new Views(spark, resolve)
 
     /** Which subject species the catalog actually holds. */
-    def hasHuman: Boolean = catalog.tableNames.contains("Subjects")
-    def hasAnimal: Boolean = catalog.tableNames.contains("AnimalSubjects")
+    def hasHuman: Boolean = hasHuman(catalog.tableNames)
+    def hasAnimal: Boolean = hasAnimal(catalog.tableNames)
+    private def hasHuman(names: Seq[String]) = names.contains("Subjects")
+    private def hasAnimal(names: Seq[String]) =
+      names.contains("AnimalSubjects")
 
     /** Register `protected_T`-equivalent temp views + the view stack so
       * `spark.sql` runs with this user's visibility. The view stack only
       * registers when its base tables exist (a partial catalog — e.g.
-      * mid-ingest — still supports direct table queries). */
+      * mid-ingest — still supports direct table queries). The catalog is
+      * listed once per call. */
     def register(): Unit = {
-      catalog.tableNames.foreach { n =>
+      val names = catalog.tableNames
+      names.foreach { n =>
         resolve(n).createOrReplaceTempView(n)
       }
-      if (Seq("Specimen", "Experiment", "Study")
-        .forall(catalog.tableNames.contains))
-        views.registerAll(hasHuman, hasAnimal)
+      if (Seq("Specimen", "Experiment", "Study").forall(names.contains))
+        views.registerAll(hasHuman(names), hasAnimal(names))
     }
 
     /** Guarded ad-hoc SQL (database.py:392-433): runs under this user's
@@ -98,7 +102,8 @@ class Engine(val spark: SparkSession, val catalog: Catalog) {
       * StudyName -> sorted [RawDataID]. */
     def queryMetaAnalysis(where: String): DataFrame = {
       val cols = extractWhereColumns(where)
-      val meta = views.metaAnalysisView(hasHuman, hasAnimal)
+      val names = catalog.tableNames
+      val meta = views.metaAnalysisView(hasHuman(names), hasAnimal(names))
       val selected = meta.filter(expr(where))
         .select((Seq("RawDataID", "StudyName") ++ cols).distinct
           .map(col): _*)

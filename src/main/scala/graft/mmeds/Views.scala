@@ -2,6 +2,7 @@ package graft.mmeds
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** The denormalizing view stack (sql/views.sql:8-84) re-expressed as
   * DataFrame joins: SpecimenView/SampleView/SubjectTypeView/SubjectView,
@@ -42,15 +43,20 @@ class Views(spark: SparkSession, tableOf: String => DataFrame) {
         col("SampleProtocolNotes"), col("SampleProtocolID"),
         col("SampleConditions"), col("SampleTool"), col("SampleToolVersion"))
 
-  /** SubjectType ⋈ junction ⋈ Experiment ⋈ Study (views.sql:42-50). */
-  def subjectTypeView: DataFrame =
-    t("SubjectType")
-      .join(t("SubjectType_has_Experiment"),
+  /** SubjectType ⋈ junction ⋈ Experiment ⋈ Study (views.sql:42-50). A
+    * catalog of one species never stored the other's key on SubjectType;
+    * it reads as a null bigint. */
+  def subjectTypeView: DataFrame = {
+    val st = t("SubjectType")
+    def key(species: String): Column =
+      if (st.columns.contains(fk(species))) col(fk(species))
+      else lit(null).cast(LongType).as(fk(species))
+    st.join(t("SubjectType_has_Experiment"),
         col(id("SubjectType")) === col(fk("SubjectType")))
       .join(b("Experiment"), col(fk("Experiment")) === col(id("Experiment")))
       .join(b("Study"), col(fk("Study")) === col(id("Study")))
-      .select(col("StudyName"), col(fk("Subjects")),
-        col(fk("AnimalSubjects")))
+      .select(col("StudyName"), key("Subjects"), key("AnimalSubjects"))
+  }
 
   /** Subjects ⋈ SubjectTypeView (views.sql:54-62). */
   def subjectView: DataFrame =

@@ -1,7 +1,10 @@
 package graft.mmeds
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parquet warehouse catalog: durability, append semantics, and the
@@ -77,5 +80,115 @@ class ParquetCatalogSpec extends AnyFunSuite {
     assert(written.unionByName(back).count() == 4)
     assert(back.as[(Long, Long, String)].collect().sorted.toSeq ==
       Seq((1L, 10L, "A"), (2L, 11L, "B")))
+  }
+
+  test("table reuses its scan until the table is written, by any catalog on the root") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("warehouse3").toString
+    val cat = new ParquetCatalog(spark, root)
+    def labs(c: Catalog) =
+      c.table("Lab").get.collect().map(_.getAs[String]("LabName")).sorted.toSeq
+    cat.append("Lab", Seq((1L, "LabA", 2L)).toDF("idLab", "LabName", "user_id"))
+    val first = cat.table("Lab").get
+    assert(cat.table("Lab").get eq first)
+
+    cat.append("Lab", Seq((2L, "LabB", 3L)).toDF("idLab", "LabName", "user_id"))
+    assert(!(cat.table("Lab").get eq first))
+    assert(labs(cat) == Seq("LabA", "LabB"))
+    assert(cat.table("Lab").get eq cat.table("Lab").get)
+
+    cat.overwrite("Lab", cat.table("Lab").get.filter(col("user_id") =!= 3L))
+    assert(labs(cat) == Seq("LabA"))
+
+    // a write through another catalog on the root is seen by its stamp
+    new ParquetCatalog(spark, root).append("Lab",
+      Seq((3L, "LabC", 4L)).toDF("idLab", "LabName", "user_id"))
+    assert(labs(cat) == Seq("LabA", "LabC"))
+    assert(cat.table("Study").isEmpty)
+  }
+
+  /** Natural columns the view stack reads, per table of a human-subject
+    * catalog (the columns the sheets carry, as `Normalizer` stores them). */
+  private val humanNaturals: Map[String, String] = Map(
+    "Lab" -> "ContactEmail ContactName PrimaryInvestigator",
+    "SampleProtocols" -> "SampleConditions SampleTool SampleToolVersion",
+    "RawDataProtocols" -> ("FinishingStrategyCoverage FinishingStrategyStatus " +
+      "NumberOfContigs SequencingMethod TargetGene"),
+    "ResultsProtocols" -> "ResultsMethod ResultsTool ResultsToolVersion",
+    "IllnessBroadCategory" -> "ICDFirstCharacter",
+    "IllnessCategory" -> "ICDCategory",
+    "IllnessDetails" -> "ICDDetails ICDExtension",
+    "Interventions" -> "InterventionCode InterventionName InterventionType",
+    "BodySite" -> "SpecimenBodySite UberonCodeBodySite",
+    "Type" -> "SpecimenType UberonCodeType",
+    "CollectionSite" -> ("Biome CollectionSiteName CollectionSiteTechnician " +
+      "Depth Elevation Environment Feature Latitude Longitude Material"),
+    "Study" -> "StudyName StudyType RelevantLinks",
+    "Experiment" -> "ExperimentName",
+    "Genotypes" -> "Genotype",
+    "Ethnicity" -> "Ethnicity",
+    "Subjects" -> "HostSubjectId Nationality Sex BirthYear",
+    "Heights" -> "Height HeightDateCollected",
+    "Weights" -> "Weight WeightDateCollected",
+    "Illness" -> "IllnessInstanceID IllnessStartDate IllnessEndDate IllnessNotes",
+    "Intervention" -> "InterventionStartDate InterventionEndDate InterventionNotes",
+    "SubjectType" -> "SubjectType",
+    "StorageLocation" -> "StorageInstitution StorageFreezer",
+    "Specimen" -> ("SpecimenID SpecimenCollectionDate SpecimenCollectionMethod " +
+      "SpecimenCollectionTime SpecimenNotes SpecimenWeight SpecimenWeightUnit"),
+    "Aliquot" -> "AliquotID AliquotWeight AliquotWeightUnit",
+    "SampleProtocol" -> "SampleProtocolID SampleProtocolNotes",
+    "Sample" -> ("SampleID SampleWeight SampleWeightUnit SampleDatePerformed " +
+      "SampleProcessor"),
+    "RawDataProtocol" -> "RawDataProtocolID",
+    "RawData" -> ("RawDataID BarcodeSequence LinkerPrimerSequence RawDataNotes " +
+      "RawDataDatePerformed RawDataProcessor"),
+    "ResultsProtocol" -> "ResultsProtocolID",
+    "Results" -> "ResultID ResultsLocation ResultsDatePerformed ResultsProcessor")
+
+  /** A human-subject catalog of `tables`: study k (1-based) is owned by
+    * `owners(k - 1)` and holds one row per table, keyed k, with every
+    * foreign key pointing at row k of its parent and every natural column
+    * reading `<column>-k`. SubjectType carries no AnimalSubjects key, as
+    * an ingest of human subjects leaves it. */
+  private def humanCatalog(tables: Set[String], owners: Seq[Long]): ParquetCatalog = {
+    val cat = new ParquetCatalog(spark,
+      java.nio.file.Files.createTempDirectory("humans").toString)
+    def write(name: String, naturals: Seq[String], keys: Seq[String]): Unit = {
+      val schema = StructType(naturals.map(StructField(_, StringType)) ++
+        (keys :+ "user_id").map(StructField(_, LongType)))
+      val rows = owners.zipWithIndex.map { case (owner, i) =>
+        val k = i + 1
+        Row.fromSeq(naturals.map(c => s"$c-$k") ++ keys.map(_ => k.toLong) :+ owner)
+      }
+      cat.append(name, spark.createDataFrame(rows.asJava, schema))
+    }
+    for (t <- Schema.tableOrder if tables(t) && humanNaturals.contains(t))
+      write(t, humanNaturals(t).split(" ").toSeq,
+        Schema.parents.getOrElse(t, Nil).filter(tables).map(Schema.fkCol) :+
+          Schema.idCol(t))
+    for ((j, l, r) <- Schema.junctionTables if tables(l) && tables(r))
+      write(j, Nil, Seq(Schema.fkCol(l), Schema.fkCol(r)))
+    cat
+  }
+
+  test("SpecimenView over a ParquetCatalog: one user's rows plus the public ones") {
+    val cat = humanCatalog(Set("Specimen", "Experiment", "Study"), Seq(1L, 2L, 3L))
+    val got = new Engine(spark, cat).forUser(3L).views.specimenView
+      .select("SpecimenID", "user_id", "StudyName").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).sorted.toSeq
+    assert(got == Seq(("SpecimenID-1", 1L, "StudyName-1"),
+      ("SpecimenID-3", 3L, "StudyName-3")))
+  }
+
+  test("guarded SQL over a human-only catalog: SubjectTypeView lists the user's studies") {
+    val tables = humanNaturals.keySet ++ Schema.junctionTables.map(_._1)
+    val cat = humanCatalog(tables, Seq(1L, 2L, 3L))
+    assert(!cat.table("SubjectType").get.columns
+      .contains(Schema.fkCol("AnimalSubjects")))
+    val got = new Engine(spark, cat).forUser(2L)
+      .execute("SELECT StudyName FROM SubjectTypeView")
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(got == Seq("StudyName-1", "StudyName-2"))
   }
 }
