@@ -169,14 +169,5 @@ class Engine(val spark: SparkSession, val catalog: Catalog) {
         }
       } finally out.close()
     }
-
-    /** Remove exactly this user's rows from every table
-      * (database.py clear_user_data, tests:166-206). */
-    def clearUserData(): Unit =
-      catalog.tableNames.foreach { n =>
-        val df = table(n)
-        if (df.columns.contains("user_id"))
-          catalog.overwrite(n, df.filter(col("user_id") =!= userId))
-      }
   }
 }

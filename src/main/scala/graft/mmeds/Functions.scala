@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Remaining scalar-function surface of SURVEY §2.9 not covered by
-  * [[Icd]]: string hygiene, camel-casing, identifier validation, and the
-  * trigger-replacing derived weights. */
+  * [[Icd]]: camel-casing, identifier validation, access codes, and the
+  * trigger-replacing effective specimen weights. */
 object Functions {
 
   /** camel_case (util.py:239-242): split on `_ - . '` and space,
@@ -13,13 +13,6 @@ object Functions {
     * normalized separator then strip spaces. */
   def camelCase(c: Column): Column =
     regexp_replace(initcap(regexp_replace(c, "[_\\-.' ]+", " ")), " ", "")
-
-  /** Numeric-parse test (util.py:613-624 is_numeric). */
-  def isNumeric(c: Column): Column = c.try_cast("double").isNotNull
-
-  /** Non-ASCII scrub applied on export (util.py:303). */
-  def asciiScrub(c: Column): Column =
-    regexp_replace(c, "[^\\x00-\\x7f]", "")
 
   /** Identifier validation for API inputs (util.py:1015-1048 quote_sql:
     * allow-list charset, <= 66 chars). Catalyst parameterization makes
@@ -65,23 +58,6 @@ object Functions {
         col("SpecimenWeight").as("initial_weight"),
         coalesce(col("_allocated"), lit(0.0)).as("allocated_weight"),
         (col("SpecimenWeight") - coalesce(col("_allocated"), lit(0.0)))
-          .as("effective_weight"))
-  }
-
-  /** Effective aliquot weights: initial minus sample draws
-    * (sql/triggers.sql:21-36). */
-  def effectiveAliquotWeights(catalog: Catalog): DataFrame = {
-    val aliquot = catalog.table("Aliquot").get
-    val sample = catalog.table("Sample").get
-    val child = sample.groupBy(col(Schema.fkCol("Aliquot")))
-      .agg(sum(col("SampleWeight")).as("_allocated"))
-    aliquot.join(child,
-        aliquot(Schema.idCol("Aliquot")) === child(Schema.fkCol("Aliquot")),
-        "left_outer")
-      .select(aliquot(Schema.idCol("Aliquot")), col("AliquotID"),
-        col("AliquotWeight").as("initial_weight"),
-        coalesce(col("_allocated"), lit(0.0)).as("allocated_weight"),
-        (col("AliquotWeight") - coalesce(col("_allocated"), lit(0.0)))
           .as("effective_weight"))
   }
 }

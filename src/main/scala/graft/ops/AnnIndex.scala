@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted ANN indexes: the 100 TB path for similarity search.
@@ -69,7 +69,7 @@ object AnnIndex {
     * directories, the layout every store starts with). */
   def currentGeneration(spark: SparkSession, path: String): Long =
     if (!StoreFiles.exists(spark, s"$path/genptr")) 0L
-    else spark.read.parquet(s"$path/genptr").head().getLong(0)
+    else StoreFiles.sidecar(spark, s"$path/genptr")(_.head().getLong(0))
 
   /** The directory root the current generation's sub-tables live
     * under — `path` itself at generation 0, `<path>/gens/g<N>` after N
@@ -186,9 +186,9 @@ object AnnIndex {
   private def writeErrStateAll(spark: SparkSession, root: String,
       storedSub: String, cents: Array[(Int, Array[Double])]): Unit = {
     val (n, s) = errSumOf(
-      dropTombstoned(spark, root,
-        spark.read.parquet(s"$root/$storedSub")
-          .select(col("vec_id"), col("v"))), cents)
+      StoreFiles.dropTombstoned(spark, root,
+        StoreFiles.scan(spark, s"$root/$storedSub")
+          .select(col("vec_id"), col("v")), "vec_id"), cents)
     writeErrRow(spark, root, -1L, n, s, "overwrite")
   }
 
@@ -199,7 +199,7 @@ object AnnIndex {
       keepFrom: Long): Unit =
     if (StoreFiles.exists(spark, s"$root/errstate"))
       StoreFiles.replaceDir(spark, s"$root/errstate") { tmp =>
-        val all = spark.read.parquet(s"$root/errstate")
+        val all = StoreFiles.scan(spark, s"$root/errstate")
         all.filter(col("batch_id") < keepFrom)
           .agg(lit(-1L).as("batch_id"),
             coalesce(sum(col("n")), lit(0L)).as("n"),
@@ -222,12 +222,12 @@ object AnnIndex {
     * so the two grids never mix. */
   private def writePqErrStateAll(spark: SparkSession, root: String,
       cb: Array[Array[Array[Double]]]): Unit = {
-    val codes = dropTombstoned(spark, root,
-        spark.read.parquet(s"$root/codes"))
+    val codes = StoreFiles.dropTombstoned(spark, root,
+        StoreFiles.scan(spark, s"$root/codes"), "vec_id")
       .select(col("vec_id"), col("codes"))
-    val r = dropTombstoned(spark, root,
-        spark.read.parquet(s"$root/vectors")
-          .select(col("vec_id"), col("v")))
+    val r = StoreFiles.dropTombstoned(spark, root,
+        StoreFiles.scan(spark, s"$root/vectors")
+          .select(col("vec_id"), col("v")), "vec_id")
       .join(codes, Seq("vec_id"))
       .select(Similarity.pqErrFromCodes(col("v"), col("codes"), cb)
         .cast("long").as("e"))
@@ -263,7 +263,7 @@ object AnnIndex {
       root: String): Option[(Long, Long)] =
     if (!StoreFiles.exists(spark, s"$root/errstate")) None
     else {
-      val r = spark.read.parquet(s"$root/errstate")
+      val r = StoreFiles.scan(spark, s"$root/errstate")
         .agg(coalesce(sum(col("n")), lit(0L)),
           coalesce(sum(col("sum_e6")), lit(0L))).head()
       Some((r.getLong(0), r.getLong(1)))
@@ -317,7 +317,7 @@ object AnnIndex {
     * LSH layout. */
   def putLshBatch(batch: DataFrame, id: Column, vec: Column,
       path: String, batchId: Long, attrs: Seq[Column] = Nil): Unit = {
-    val meta = batch.sparkSession.read.parquet(s"$path/meta").head()
+    val meta = readMeta(batch.sparkSession, path)
     val planes = Similarity.planeVectors(meta.getInt(0), meta.getInt(1))
     batch.select(id.as("vec_id") +: Similarity.l2Normalize(vec).as("v") +:
         Similarity.lshBucket(vec, planes).as("bucket") +: attrs: _*)
@@ -345,7 +345,7 @@ object AnnIndex {
   def appendLshIndex(batch: DataFrame, id: Column, vec: Column,
       path: String, attrs: Seq[Column] = Nil,
       maxFilesPerDir: Int = 0): Unit = {
-    val meta = batch.sparkSession.read.parquet(s"$path/meta").head()
+    val meta = readMeta(batch.sparkSession, path)
     val planes = Similarity.planeVectors(meta.getInt(0), meta.getInt(1))
     val rows = batch.select(
         id.as("vec_id") +: Similarity.l2Normalize(vec).as("v") +:
@@ -427,9 +427,9 @@ object AnnIndex {
         val storedSub =
           if (StoreFiles.exists(spark, s"$root/vectors")) "vectors"
           else "index"
-        val gone = dropTombstoned(spark, root,
-          spark.read.parquet(s"$root/$storedSub")
-            .select(col("vec_id"), col("v")))
+        val gone = StoreFiles.dropTombstoned(spark, root,
+          StoreFiles.scan(spark, s"$root/$storedSub")
+            .select(col("vec_id"), col("v")), "vec_id")
           .join(idsD, Seq("vec_id"), "left_semi")
         if (StoreFiles.exists(spark, s"$root/centroids"))
           Some(errSumOf(gone, readCentroids(spark, root)))
@@ -439,8 +439,8 @@ object AnnIndex {
           // which codeword each row quantized to — dist-to-argmin,
           // no re-min (the writePqErrStateAll form on the gone set)
           val cb = readCodebook(spark, s"$root/codebook")
-          val r = gone.join(dropTombstoned(spark, root,
-              spark.read.parquet(s"$root/codes"))
+          val r = gone.join(StoreFiles.dropTombstoned(spark, root,
+              StoreFiles.scan(spark, s"$root/codes"), "vec_id")
               .select(col("vec_id"), col("codes")), Seq("vec_id"))
             .select(Similarity.pqErrFromCodes(col("v"), col("codes"),
               cb).cast("long").as("e"))
@@ -462,12 +462,6 @@ object AnnIndex {
     (0 to math.min(probeFlips, numPlanes)).flatMap(r =>
       (0 until numPlanes).combinations(r)
         .map(_.foldLeft(0L)((acc, p) => acc | (1L << p))))
-
-  private def dropTombstoned(spark: SparkSession, path: String,
-      rows: DataFrame): DataFrame =
-    if (!StoreFiles.exists(spark, s"$path/tombstones")) rows
-    else rows.join(spark.read.parquet(s"$path/tombstones"),
-      Seq("vec_id"), "left_anti")
 
   /** Compact a persisted ANN index: physically drop tombstoned rows
     * from every sub-table present (partition-pruned `index/` for
@@ -544,8 +538,8 @@ object AnnIndex {
     def sub(name: String): Unit =
       if (StoreFiles.exists(spark, s"$root/$name"))
         StoreFiles.replaceDir(spark, s"$root/$name") { tmp =>
-          val live1 = dropTombstoned(spark, root,
-            spark.read.parquet(s"$root/$name"))
+          val live1 = StoreFiles.dropTombstoned(spark, root,
+            StoreFiles.scan(spark, s"$root/$name"), "vec_id")
           val live = attrF.filter(_ => attrSubs.contains(name))
             .fold(live1)(a => live1.join(a, Seq("vec_id"), "left"))
           val pcol = Seq("bucket", "cell").find(live.columns.contains)
@@ -645,13 +639,13 @@ object AnnIndex {
     StoreFiles.delete(spark, nextRoot)
     val cbOld = readCodebook(spark, s"$root/codebook")
     val (numSub, cbSize) = (cbOld.length, cbOld(0).length)
-    val oldCodes = dropTombstoned(spark, root,
-      spark.read.parquet(s"$root/codes"))
+    val oldCodes = StoreFiles.dropTombstoned(spark, root,
+      StoreFiles.scan(spark, s"$root/codes"), "vec_id")
     val batchKeyed = oldCodes.columns.contains("batch_id")
     val attrCols = oldCodes.columns
       .filterNot(Set("vec_id", "codes", "batch_id"))
-    val liveVecs = dropTombstoned(spark, root,
-        spark.read.parquet(s"$root/vectors"))
+    val liveVecs = StoreFiles.dropTombstoned(spark, root,
+        StoreFiles.scan(spark, s"$root/vectors"), "vec_id")
       .select(col("vec_id"), col("v"))
       .localCheckpoint(eager = false)
     val cb = Similarity.pqCodebookFrom(
@@ -764,11 +758,11 @@ object AnnIndex {
       case Some((n, s)) => (n, Option(s))
       case None =>
         val r = errSum(
-          dropTombstoned(spark, root,
-            spark.read.parquet(
+          StoreFiles.dropTombstoned(spark, root,
+            StoreFiles.scan(spark,
                 s"$root/" + (if (StoreFiles.exists(spark,
                   s"$root/vectors")) "vectors" else "index"))
-              .select(col("vec_id"), col("v"))),
+              .select(col("vec_id"), col("v")), "vec_id"),
           "n_stored", "stored_sum_e6").head()
         (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
     }
@@ -842,9 +836,9 @@ object AnnIndex {
     val nextGen = currentGeneration(spark, path) + 1
     val nextRoot = s"$path/gens/g$nextGen"
     StoreFiles.delete(spark, nextRoot)
-    val nList = spark.read.parquet(s"$root/centroids").count().toInt
-    val live = dropTombstoned(spark, root,
-        spark.read.parquet(s"$root/index"))
+    val nList = readCentroids(spark, root).length
+    val live = StoreFiles.dropTombstoned(spark, root,
+        StoreFiles.scan(spark, s"$root/index"), "vec_id")
       .localCheckpoint(eager = false)
     val cents = Similarity.ivfCentroidsKMeansPre(
       live.select(col("vec_id"), col("v")), nList, iters)
@@ -878,16 +872,16 @@ object AnnIndex {
     val nextGen = currentGeneration(spark, path) + 1
     val nextRoot = s"$path/gens/g$nextGen"
     StoreFiles.delete(spark, nextRoot)
-    val nList = spark.read.parquet(s"$root/centroids").count().toInt
+    val nList = readCentroids(spark, root).length
     val cbOld = readCodebook(spark, s"$root/codebook")
     val (numSub, cbSize) = (cbOld.length, cbOld(0).length)
-    val oldCodes = dropTombstoned(spark, root,
-      spark.read.parquet(s"$root/codes"))
+    val oldCodes = StoreFiles.dropTombstoned(spark, root,
+      StoreFiles.scan(spark, s"$root/codes"), "vec_id")
     val batchKeyed = oldCodes.columns.contains("batch_id")
     val attrCols = oldCodes.columns
       .filterNot(Set("vec_id", "cell", "codes", "batch_id"))
-    val liveVecs = dropTombstoned(spark, root,
-        spark.read.parquet(s"$root/vectors"))
+    val liveVecs = StoreFiles.dropTombstoned(spark, root,
+        StoreFiles.scan(spark, s"$root/vectors"), "vec_id")
       .select(col("vec_id"), col("v"))
       .localCheckpoint(eager = false)
     val (cents, cb, coded0) = Similarity.ivfPqEncodePre(
@@ -905,8 +899,8 @@ object AnnIndex {
         .write.partitionBy("batch_id", "cell").parquet(s"$nextRoot/codes")
     else coded.repartition(col("cell"))
       .write.partitionBy("cell").parquet(s"$nextRoot/codes")
-    val liveFull = dropTombstoned(spark, root,
-      spark.read.parquet(s"$root/vectors"))
+    val liveFull = StoreFiles.dropTombstoned(spark, root,
+      StoreFiles.scan(spark, s"$root/vectors"), "vec_id")
     if (batchKeyed)
       liveFull.drop("batch_id").withColumn("batch_id", lit(-1L))
         .repartitionByRange(
@@ -944,7 +938,7 @@ object AnnIndex {
       attrFilter: Option[Column] = None): DataFrame =
     lshCandidates(spark, path, query, probeFlips, attrFilter) match {
       case None =>
-        spark.read.parquet(s"$path/index")
+        StoreFiles.scan(spark, s"$path/index")
           .select(col("vec_id"), lit(0.0d).as("cos"),
             lit(0).as("rank")).limit(0)
       case Some(scored) => Similarity.topKRanked(scored, k)
@@ -975,7 +969,7 @@ object AnnIndex {
   def lshKnnJoinIndexed(spark: SparkSession, path: String,
       queries: DataFrame, qid: Column, qvec: Column, k: Int,
       probeFlips: Int = 1, attrFilter: Option[Column] = None): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = readMeta(spark, path)
     val (numPlanes, dim) = (meta.getInt(0), meta.getInt(1))
     val planes = Similarity.planeVectors(numPlanes, dim)
     val qRows = collectQueryBatch(
@@ -983,7 +977,7 @@ object AnnIndex {
           Similarity.l2Normalize(qvec).as("qv")), perQuery = k)
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     if (qRows.isEmpty)
-      return spark.read.parquet(s"$path/index")
+      return StoreFiles.scan(spark, s"$path/index")
         .select(lit(0L).as("query_id"), col("vec_id"),
           lit(0.0d).as("cos"), lit(0L).as("rank")).limit(0)
     val masks = flipMasks(numPlanes, probeFlips)
@@ -1000,9 +994,9 @@ object AnnIndex {
       .flatMap { case (q, bs) => bs.map(b => (q, b)) }
       .toDF("query_id", "bucket")
     val qvDf = qRows.toSeq.toDF("query_id", "qv")
-    val index = dropTombstoned(spark, path,
-      attrFilter.foldLeft(spark.read.parquet(s"$path/index"))(_.filter(_))
-        .filter(col("bucket").isin(probedBuckets: _*)))
+    val index = StoreFiles.dropTombstoned(spark, path,
+      attrFilter.foldLeft(StoreFiles.scan(spark, s"$path/index"))(_.filter(_))
+        .filter(col("bucket").isin(probedBuckets: _*)), "vec_id")
     index.join(broadcast(pairs), Seq("bucket"))
       .join(broadcast(qvDf), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -1076,7 +1070,7 @@ object AnnIndex {
     * (batch_id, bucket) nesting). */
   def putLshMultiBatch(batch: DataFrame, id: Column, vec: Column,
       path: String, batchId: Long, attrs: Seq[Column] = Nil): Unit = {
-    val meta = batch.sparkSession.read.parquet(s"$path/meta").head()
+    val meta = readMeta(batch.sparkSession, path)
     val (numPlanes, dim, numTables) =
       (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val all = Similarity.planeVectors(numPlanes * numTables, dim)
@@ -1105,7 +1099,7 @@ object AnnIndex {
   def appendLshMultiIndex(batch: DataFrame, id: Column, vec: Column,
       path: String, attrs: Seq[Column] = Nil,
       maxFilesPerDir: Int = 0): Unit = {
-    val meta = batch.sparkSession.read.parquet(s"$path/meta").head()
+    val meta = readMeta(batch.sparkSession, path)
     val (numPlanes, dim, numTables) =
       (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val all = Similarity.planeVectors(numPlanes * numTables, dim)
@@ -1139,7 +1133,7 @@ object AnnIndex {
       queries: DataFrame, qid: Column, qvec: Column, k: Int,
       probeFlips: Int = 1, tables: Int = 0,
       attrFilter: Option[Column] = None): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = readMeta(spark, path)
     val (numPlanes, dim, numTables) =
       (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val useT = if (tables <= 0) numTables else math.min(tables, numTables)
@@ -1149,7 +1143,7 @@ object AnnIndex {
           Similarity.l2Normalize(qvec).as("qv")), perQuery = k)
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     if (qRows.isEmpty)
-      return spark.read.parquet(s"$path/index")
+      return StoreFiles.scan(spark, s"$path/index")
         .select(lit(0L).as("query_id"), col("vec_id"),
           lit(0.0d).as("cos"), lit(0L).as("rank")).limit(0)
     val masks = flipMasks(numPlanes, probeFlips)
@@ -1169,9 +1163,9 @@ object AnnIndex {
       .flatMap { case (q, bs) => bs.map(b => (q, b)) }
       .toDF("query_id", "bucket")
     val qvDf = qRows.toSeq.toDF("query_id", "qv")
-    val index = dropTombstoned(spark, path,
-      attrFilter.foldLeft(spark.read.parquet(s"$path/index"))(_.filter(_))
-        .filter(col("bucket").isin(probedBuckets: _*)))
+    val index = StoreFiles.dropTombstoned(spark, path,
+      attrFilter.foldLeft(StoreFiles.scan(spark, s"$path/index"))(_.filter(_))
+        .filter(col("bucket").isin(probedBuckets: _*)), "vec_id")
     index.join(broadcast(pairs), Seq("bucket"))
       .join(broadcast(qvDf), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -1192,10 +1186,10 @@ object AnnIndex {
   private[graft] def lshCandidates(spark: SparkSession, path: String,
       query: DataFrame, probeFlips: Int,
       attrFilter: Option[Column] = None): Option[DataFrame] = {
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = readMeta(spark, path)
     val (numPlanes, dim) = (meta.getInt(0), meta.getInt(1))
-    val index = dropTombstoned(spark, path, attrFilter.foldLeft(
-      spark.read.parquet(s"$path/index"))(_.filter(_)))
+    val index = StoreFiles.dropTombstoned(spark, path, attrFilter.foldLeft(
+      StoreFiles.scan(spark, s"$path/index"))(_.filter(_)), "vec_id")
     val qRows = query.select(col(query.columns.head).as("qv")).head(1)
     if (qRows.isEmpty) return None
     val qv = qRows(0).getSeq[Double](0).toArray
@@ -1418,8 +1412,8 @@ object AnnIndex {
       .head().getSeq[Double](0).toArray
     val qTable = Similarity.pqAdcTable(q4Row, cb)
     Similarity.pqRank(
-      dropTombstoned(spark, root, attrFilter.foldLeft(
-          spark.read.parquet(s"$root/codes"))(_.filter(_)))
+      StoreFiles.dropTombstoned(spark, root, attrFilter.foldLeft(
+          StoreFiles.scan(spark, s"$root/codes"))(_.filter(_)), "vec_id")
         .select(col("vec_id"),
           Similarity.pqScoreFromCodes(col("codes"), qTable)
             .cast("long").as("adc_score")), k)
@@ -1453,7 +1447,7 @@ object AnnIndex {
           Similarity.pqQ4(qvec).as("q4")), perQuery = k)
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     if (qRows.isEmpty)
-      return spark.read.parquet(s"$root/codes")
+      return StoreFiles.scan(spark, s"$root/codes")
         .select(lit(0L).as("query_id"), col("vec_id"),
           lit(0L).as("adc_score"), lit(0L).as("rank")).limit(0)
     import spark.implicits._
@@ -1464,8 +1458,8 @@ object AnnIndex {
         element_at(col("qtab"),
           lit(m * cbSize) + element_at(col("codes"), m + 1) + lit(1)))
       .reduce(_ + _)
-    dropTombstoned(spark, root, attrFilter.foldLeft(
-        spark.read.parquet(s"$root/codes"))(_.filter(_)))
+    StoreFiles.dropTombstoned(spark, root, attrFilter.foldLeft(
+        StoreFiles.scan(spark, s"$root/codes"))(_.filter(_)), "vec_id")
       .crossJoin(broadcast(qDf))
       .select(col("query_id"), col("vec_id"),
         adc.cast("long").as("adc_score"))
@@ -1530,14 +1524,14 @@ object AnnIndex {
   def queryQuantizedIndex(spark: SparkSession, path: String,
       query: DataFrame, k: Int, rerank: Int,
       attrFilter: Option[Column] = None): DataFrame = {
-    val codes = dropTombstoned(spark, path, attrFilter.foldLeft(
-      spark.read.parquet(s"$path/codes"))(_.filter(_)))
+    val codes = StoreFiles.dropTombstoned(spark, path, attrFilter.foldLeft(
+      StoreFiles.scan(spark, s"$path/codes"))(_.filter(_)), "vec_id")
     val qRows = query.select(col(query.columns.head).as("qv")).head(1)
     if (qRows.isEmpty)
       return codes.select(col("vec_id"), lit(0.0d).as("cos"),
         lit(0).as("rank")).limit(0)
     val qv = qRows(0).getSeq[Double](0).toArray
-    val statRows = spark.read.parquet(s"$path/stats").collect()
+    val statRows = StoreFiles.scan(spark, s"$path/stats").collect()
     val mn = new Array[Long](qv.length); val mx = new Array[Long](qv.length)
     statRows.foreach { r =>
       val d = r.getLong(0).toInt; mn(d) = r.getLong(1); mx(d) = r.getLong(2)
@@ -1552,7 +1546,7 @@ object AnnIndex {
       .orderBy(col("ascore").desc, col("vec_id")).limit(rerank)
       .collect().map(_.getLong(0))
     Similarity.topKRanked(
-      spark.read.parquet(s"$path/vectors")
+      StoreFiles.scan(spark, s"$path/vectors")
         .filter(col("vec_id").isin(candidates.toIndexedSeq: _*))
         .select(col("vec_id"),
           round(Similarity.dot(col("v"), lit(qv)), 4).as("cos")),
@@ -1583,10 +1577,10 @@ object AnnIndex {
           Similarity.l2Normalize(qvec).as("qv")), perQuery = rerank)
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     if (qRows.isEmpty)
-      return spark.read.parquet(s"$path/codes")
+      return StoreFiles.scan(spark, s"$path/codes")
         .select(lit(0L).as("query_id"), col("vec_id"),
           lit(0.0d).as("cos"), lit(0L).as("rank")).limit(0)
-    val statRows = spark.read.parquet(s"$path/stats").collect()
+    val statRows = StoreFiles.scan(spark, s"$path/stats").collect()
     val dim = statRows.length
     val mn = new Array[Long](dim); val mx = new Array[Long](dim)
     statRows.foreach { r =>
@@ -1598,8 +1592,8 @@ object AnnIndex {
     val qDf = qRows.toSeq.map { case (q, qv) =>
       (q, qv.map(x => math.floor(x * 10000.0)).toSeq)
     }.toDF("query_id", "qe4")
-    val codes = dropTombstoned(spark, path, attrFilter.foldLeft(
-      spark.read.parquet(s"$path/codes"))(_.filter(_)))
+    val codes = StoreFiles.dropTombstoned(spark, path, attrFilter.foldLeft(
+      StoreFiles.scan(spark, s"$path/codes"))(_.filter(_)), "vec_id")
     val decoded = transform(col("codes"), (c, i) =>
       (c.cast("double") + lit(128.0)) * element_at(decMul, i + 1) +
         element_at(decAdd, i + 1))
@@ -1617,7 +1611,7 @@ object AnnIndex {
     val shortIds = shortTriples.map(_._2).distinct.toIndexedSeq
     val pairsDf = shortTriples.toSeq.toDF("query_id", "vec_id")
     val qvDf = qRows.toSeq.toDF("query_id", "qv")
-    spark.read.parquet(s"$path/vectors")
+    StoreFiles.scan(spark, s"$path/vectors")
       .filter(col("vec_id").isin(shortIds: _*))
       .join(broadcast(pairsDf), Seq("vec_id"))
       .join(broadcast(qvDf), Seq("query_id"))
@@ -1663,9 +1657,9 @@ object AnnIndex {
     // RAW tables (querying by a deleted or filtered-out id is the
     // caller's call); only the candidate scan excludes tombstoned
     // vectors and applies the attribute filter
-    val bits = dropTombstoned(spark, path, attrFilter.foldLeft(
-      spark.read.parquet(s"$path/bits"))(_.filter(_)))
-    val qRows = spark.read.parquet(s"$path/bits")
+    val bits = StoreFiles.dropTombstoned(spark, path, attrFilter.foldLeft(
+      StoreFiles.scan(spark, s"$path/bits"))(_.filter(_)), "vec_id")
+    val qRows = StoreFiles.scan(spark, s"$path/bits")
       .filter(col("vec_id") === queryId).head(1)
     if (qRows.isEmpty)
       return bits.select(col("vec_id"), lit(0.0d).as("cos"),
@@ -1677,7 +1671,7 @@ object AnnIndex {
           .as("_ham"))
       .orderBy(col("_ham"), col("vec_id")).limit(shortlist)
       .collect().map(_.getLong(0))
-    val vectors = spark.read.parquet(s"$path/vectors")
+    val vectors = StoreFiles.scan(spark, s"$path/vectors")
     val qv = vectors.filter(col("vec_id") === queryId)
       .head().getSeq[Double](1).toArray
     Similarity.topKRanked(
@@ -1709,18 +1703,18 @@ object AnnIndex {
         perQuery = shortlist)
       .map(_.getLong(0))
     if (qIds.isEmpty)
-      return spark.read.parquet(s"$path/bits")
+      return StoreFiles.scan(spark, s"$path/bits")
         .select(lit(0L).as("query_id"), col("vec_id"),
           lit(0.0d).as("cos"), lit(0L).as("rank")).limit(0)
     // signature lookups read the RAW table (querying by a deleted id
     // is the caller's call); only the candidate scan drops tombstones
-    val sigRows = spark.read.parquet(s"$path/bits")
+    val sigRows = StoreFiles.scan(spark, s"$path/bits")
       .filter(col("vec_id").isin(qIds.toIndexedSeq: _*))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     import spark.implicits._
     val qSig = sigRows.toSeq.toDF("query_id", "qlo", "qhi")
-    val bits = dropTombstoned(spark, path, attrFilter.foldLeft(
-      spark.read.parquet(s"$path/bits"))(_.filter(_)))
+    val bits = StoreFiles.dropTombstoned(spark, path, attrFilter.foldLeft(
+      StoreFiles.scan(spark, s"$path/bits"))(_.filter(_)), "vec_id")
     val shortPairs = bits.crossJoin(broadcast(qSig))
       .select(col("query_id"), col("vec_id"),
         (bit_count(col("lo").bitwiseXOR(col("qlo"))) +
@@ -1733,12 +1727,12 @@ object AnnIndex {
       .select(col("query_id"), col("p.id").as("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val shortIds = shortPairs.map(_._2).distinct.toIndexedSeq
-    val qvRows = spark.read.parquet(s"$path/vectors")
+    val qvRows = StoreFiles.scan(spark, s"$path/vectors")
       .filter(col("vec_id").isin(qIds.toIndexedSeq: _*))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val pairsDf = shortPairs.toSeq.toDF("query_id", "vec_id")
     val qvDf = qvRows.toSeq.toDF("query_id", "qv")
-    spark.read.parquet(s"$path/vectors")
+    StoreFiles.scan(spark, s"$path/vectors")
       .filter(col("vec_id").isin(shortIds: _*))
       .join(broadcast(pairsDf), Seq("vec_id"))
       .join(broadcast(qvDf), Seq("query_id"))
@@ -1841,7 +1835,7 @@ object AnnIndex {
   private def foldBatches(spark: SparkSession, dir: String,
       pcol: Option[String], keepFrom: Long): Unit =
     StoreFiles.replaceDir(spark, dir) { tmp =>
-      val all = spark.read.parquet(dir)
+      val all = StoreFiles.scan(spark, dir)
       val out = all.filter(col("batch_id") < keepFrom).drop("batch_id")
         .withColumn("batch_id", lit(-1L))
         .unionByName(all.filter(col("batch_id") >= keepFrom))
@@ -1943,9 +1937,9 @@ object AnnIndex {
     // pruned scan — the predicate pushes to parquet next to the cell
     // pruning (filtered vector search, the queryLshIndex contract:
     // candidates are restricted, distances and ranking are unchanged)
-    val index = dropTombstoned(spark, root,
-      attrFilter.foldLeft(spark.read.parquet(s"$root/index"))(_.filter(_))
-        .filter(col("cell").isin(probedCells: _*)))
+    val index = StoreFiles.dropTombstoned(spark, root,
+      attrFilter.foldLeft(StoreFiles.scan(spark, s"$root/index"))(_.filter(_))
+        .filter(col("cell").isin(probedCells: _*)), "vec_id")
     index.join(broadcast(probes), Seq("cell"))
       .select(col("query_id"), col("vec_id"),
         round(Similarity.dot(col("v"), col("qv")), 4).as("cos"))
@@ -1965,15 +1959,14 @@ object AnnIndex {
       k: Int, nProbe: Int = 4,
       attrFilter: Option[Column] = None): DataFrame = {
     val root = currentRoot(spark, path) // generation pin (one resolve)
-    val index = dropTombstoned(spark, root, attrFilter.foldLeft(
-      spark.read.parquet(s"$root/index"))(_.filter(_)))
+    val index = StoreFiles.dropTombstoned(spark, root, attrFilter.foldLeft(
+      StoreFiles.scan(spark, s"$root/index"))(_.filter(_)), "vec_id")
     val qRows = query.select(col(query.columns.head).as("qv")).head(1)
     if (qRows.isEmpty)
       return index.select(col("vec_id"), lit(0.0d).as("cos"),
         lit(0).as("rank")).limit(0)
     val qv = qRows(0).getSeq[Double](0).toArray
-    val cells = spark.read.parquet(s"$root/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+    val cells = readCentroids(spark, root)
       .map { case (cell, cv) => (cell, dotLocal(cv, qv)) }
       .sortBy { case (cell, score) => (-score, cell) }
       .take(nProbe).map(_._1)
@@ -2134,21 +2127,29 @@ object AnnIndex {
       foldPqErrObserved(spark, root, o, batchId, dynamic = true))
   }
 
+  // The model sidecars below are decoded once per on-disk stamp
+  // (StoreFiles.sidecar) and shared between probes: read-only.
+
   private def readCodebook(spark: SparkSession,
-      dir: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(dir).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
-    val cb = Array.ofDim[Double](rows.map(_._1).max + 1,
-      rows.map(_._2).max + 1, rows.map(_._3).max + 1)
-    rows.foreach { case (m, c, d, x) => cb(m)(c)(d) = x }
-    cb
-  }
+      dir: String): Array[Array[Array[Double]]] =
+    StoreFiles.sidecar(spark, dir) { df =>
+      val rows = df.collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
+      val cb = Array.ofDim[Double](rows.map(_._1).max + 1,
+        rows.map(_._2).max + 1, rows.map(_._3).max + 1)
+      rows.foreach { case (m, c, d, x) => cb(m)(c)(d) = x }
+      cb
+    }
 
   private def readCentroids(spark: SparkSession,
       path: String): Array[(Int, Array[Double])] =
-    spark.read.parquet(s"$path/centroids").collect()
+    StoreFiles.sidecar(spark, s"$path/centroids")(_.collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy { case (cell, _) => cell }
+      .sortBy { case (cell, _) => cell })
+
+  /** The LSH families' (num_planes, dim[, ...]) meta row. */
+  private def readMeta(spark: SparkSession, path: String): Row =
+    StoreFiles.sidecar(spark, s"$path/meta")(_.head())
 
   /** ADC top-k against a persisted IVF-PQ index: centroids + codebook
     * are bounded driver reads, the probed cells become a static
@@ -2165,9 +2166,9 @@ object AnnIndex {
       .select(Similarity.l2Normalize(col(query.columns.head)).as("qv"))
       .head().getSeq[Double](0).toArray
     val tabs = Similarity.ivfPqQueryTabs(qv, cents, cb, nProbe)
-    val codes = dropTombstoned(spark, root,
-      attrFilter.foldLeft(spark.read.parquet(s"$root/codes"))(_.filter(_))
-        .filter(col("cell").isin(tabs.map(_._1).toIndexedSeq: _*)))
+    val codes = StoreFiles.dropTombstoned(spark, root,
+      attrFilter.foldLeft(StoreFiles.scan(spark, s"$root/codes"))(_.filter(_))
+        .filter(col("cell").isin(tabs.map(_._1).toIndexedSeq: _*)), "vec_id")
     Similarity.pqRank(codes.select(col("vec_id"),
       Similarity.ivfPqScoreExpr(col("codes"), tabs).cast("long")
         .as("adc_score")), k)
@@ -2272,7 +2273,7 @@ object AnnIndex {
     import spark.implicits._
     val pairsDf = shortTriples.toSeq.toDF("query_id", "vec_id", "srk")
     val qvDf = qRows.toSeq.toDF("query_id", "qv")
-    spark.read.parquet(s"$root/vectors")
+    StoreFiles.scan(spark, s"$root/vectors")
       .filter(col("vec_id").isin(shortIds: _*))
       .join(broadcast(pairsDf), Seq("vec_id"))
       .join(broadcast(qvDf), Seq("query_id"))
@@ -2308,9 +2309,9 @@ object AnnIndex {
     // so a filtered top-k restricts candidates BEFORE the shortlist
     // (post-filtering the top-k would return < k rows) and stage 2
     // inherits the already-filtered shortlist for free
-    val codes = dropTombstoned(spark, root,
-      attrFilter.foldLeft(spark.read.parquet(s"$root/codes"))(_.filter(_))
-        .filter(col("cell").isin(probedCells: _*)))
+    val codes = StoreFiles.dropTombstoned(spark, root,
+      attrFilter.foldLeft(StoreFiles.scan(spark, s"$root/codes"))(_.filter(_))
+        .filter(col("cell").isin(probedCells: _*)), "vec_id")
     val adc = (0 until numSub).map(m =>
         element_at(col("qtab"),
           lit(m * cbSize) + element_at(col("codes"), m + 1) + lit(1)))

@@ -568,8 +568,6 @@ object Dedup {
         .localCheckpoint()
       changed = stepped.filter(col("_chg")).count()
       labels = stepped.select(col("id"), col("lab"))
-      if (sys.env.contains("SPARK_GRAFT_TRACE"))
-        System.err.println(s"[prop] round changed=$changed")
     }
     labels.select(col("id").as("doc_id"), col("lab").as("cluster"))
   }
@@ -668,8 +666,6 @@ object Dedup {
       done = nextSig == sig
       sig = nextSig
       edges = small
-      if (sys.env.contains("SPARK_GRAFT_TRACE"))
-        System.err.println(s"[star] round edges=${nextSig._1}")
     }
     val members = edges
       .select(col("hi").as("doc_id"), col("lo").as("cluster"))

@@ -88,9 +88,9 @@ object DedupIndex {
       .localCheckpoint(eager = false)
     val pfxs = b.select(col("pfx")).distinct().collect()
       .map(_.getString(0)).toSeq
-    val idx = dropTombstoned(spark, path,
-      spark.read.parquet(s"$path/exact")
-        .filter(col("pfx").isin(pfxs: _*)))
+    val idx = StoreFiles.dropTombstoned(spark, path,
+      StoreFiles.scan(spark, s"$path/exact")
+        .filter(col("pfx").isin(pfxs: _*)), "doc_id")
     b.join(idx.select(col("pfx"), col("fp")), Seq("pfx", "fp"), "left_anti")
       .select(col("doc_id"), col("fp"))
   }
@@ -108,12 +108,6 @@ object DedupIndex {
     ids.select(id.as("doc_id")).distinct()
       .write.mode("append").parquet(s"$path/tombstones")
 
-  private def dropTombstoned(spark: SparkSession, path: String,
-      rows: DataFrame): DataFrame =
-    if (!StoreFiles.exists(spark, s"$path/tombstones")) rows
-    else rows.join(spark.read.parquet(s"$path/tombstones"),
-      Seq("doc_id"), "left_anti")
-
   /** Compact the index: physically drop tombstoned rows from every
     * sub-table that exists (exact fingerprints, minhash lanes, banded
     * buckets), collapse the per-batch small files the appends left in
@@ -126,8 +120,8 @@ object DedupIndex {
     def sub(name: String, partition: Option[String]): Unit =
       if (StoreFiles.exists(spark, s"$path/$name"))
         StoreFiles.replaceDir(spark, s"$path/$name") { tmp =>
-          val live = dropTombstoned(spark, path,
-            spark.read.parquet(s"$path/$name"))
+          val live = StoreFiles.dropTombstoned(spark, path,
+            StoreFiles.scan(spark, s"$path/$name"), "doc_id")
           partition match {
             case Some(p) => live.repartition(col(p))
               .write.partitionBy(p).parquet(tmp)
@@ -163,6 +157,13 @@ object DedupIndex {
       .write.mode("overwrite").parquet(s"$path/meta")
   }
 
+  /** The minhash index's (num_lanes, rows_per_band). */
+  private def readMeta(spark: SparkSession, path: String): (Int, Int) =
+    StoreFiles.sidecar(spark, s"$path/meta") { df =>
+      val m = df.head()
+      (m.getInt(0), m.getInt(1))
+    }
+
   /** Append an accepted batch's lanes + banded buckets to the minhash
     * index (the near-dup twin of [[appendExact]]): one batch scan feeds
     * both tables, band partitioning preserved so later probes stay
@@ -172,8 +173,7 @@ object DedupIndex {
   def appendMinhash(batch: DataFrame, id: Column, text: Column,
       path: String): Unit = {
     val spark = batch.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (numLanes, rowsPerBand) = (meta.getInt(0), meta.getInt(1))
+    val (numLanes, rowsPerBand) = readMeta(spark, path)
     val sig = Dedup.portableLanes(batch, id, lit(true), text, numLanes)
       .localCheckpoint(eager = false)
     sig.drop("block")
@@ -218,7 +218,7 @@ object DedupIndex {
     val spark = pairs.sparkSession
     pairs.select(a.as("doc_a"), b.as("doc_b"))
       .write.mode("overwrite").parquet(s"$path/pairs")
-    val stored = spark.read.parquet(s"$path/pairs")
+    val stored = StoreFiles.scan(spark, s"$path/pairs")
     // small edge sets (the count is a parquet-metadata read — the
     // pairs just landed on disk, so probing the size re-runs no pair
     // generation) resolve with the driver-side union-find instead of
@@ -248,7 +248,7 @@ object DedupIndex {
     * per label). A map with no log (fresh build, or just compacted)
     * reads the base table verbatim. */
   def readClusterMap(spark: SparkSession, path: String): DataFrame = {
-    val base = spark.read.parquet(s"$path/clusters")
+    val base = StoreFiles.scan(spark, s"$path/clusters")
     if (!StoreFiles.exists(spark, s"$path/patches")) base
     else base.join(foldedPatches(spark, path),
         base("cluster") === col("old_lab"), "left")
@@ -261,7 +261,7 @@ object DedupIndex {
     * last compact), never corpus-sized. */
   private def foldedPatches(spark: SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(s"$path/patches")
+    StoreFiles.scan(spark, s"$path/patches")
       .groupBy(col("old_lab"))
       .agg(max_by(col("new_lab"), col("seq")).as("new_lab"))
 
@@ -311,7 +311,7 @@ object DedupIndex {
     val covPath = new org.apache.hadoop.fs.Path(s"$path/coverage")
     val fs = covPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(covPath)) return true
-    val stored = spark.read.parquet(s"$path/coverage").head()
+    val stored = StoreFiles.scan(spark, s"$path/coverage").head()
     val cur = coverageOf(docs, sig).head()
     stored.getLong(0) != cur.getLong(0) || stored.getLong(1) != cur.getLong(1)
   }
@@ -340,7 +340,7 @@ object DedupIndex {
 
   /** The stored verified near-dup edges of [[writeClusterMap]]. */
   def readClusterPairs(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/pairs")
+    StoreFiles.scan(spark, s"$path/pairs")
 
   /** MERGE an arrival's near-dup edges into the stored cluster map —
     * the scale-safe alternative to [[refreshClusterMap]]'s full
@@ -467,7 +467,7 @@ object DedupIndex {
       val hasLog = StoreFiles.exists(spark, s"$path/patches")
       val seq =
         if (!hasLog) 0L
-        else spark.read.parquet(s"$path/patches")
+        else StoreFiles.scan(spark, s"$path/patches")
           .agg(coalesce(max(col("seq")), lit(-1L))).head().getLong(0) + 1L
       // re-point the prior folded rows whose CURRENT target this
       // merge relabels — the depth-1 invariant's maintenance write;
@@ -533,8 +533,7 @@ object DedupIndex {
   def nearDupAgainstIndex(spark: SparkSession, batch: DataFrame,
       id: Column, text: Column, path: String,
       minEstimate: Double): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (numLanes, rowsPerBand) = (meta.getInt(0), meta.getInt(1))
+    val (numLanes, rowsPerBand) = readMeta(spark, path)
     val bSig = Dedup.portableLanes(batch, id, lit(true), text, numLanes)
       .localCheckpoint(eager = false)
     // Lanes ride ON the band frames (both attach joins are
@@ -555,13 +554,13 @@ object DedupIndex {
     val bBands = Dedup.portableBanded(bSig, numLanes, rowsPerBand)
       .select(col("doc_id").as("batch_doc"), col("band"), col("bucket"))
       .join(bL, "batch_doc")
-    val iL = spark.read.parquet(s"$path/lanes")
+    val iL = StoreFiles.scan(spark, s"$path/lanes")
       .select(col("doc_id").as("index_doc") +:
         lanes.map(l => col(l).as(s"i_$l")): _*)
     // tombstoned docs drop at the band (candidate) source — one
     // anti-join before the bucket join, so deleted docs can't pair
-    val iBands = dropTombstoned(spark, path,
-        spark.read.parquet(s"$path/bands"))
+    val iBands = StoreFiles.dropTombstoned(spark, path,
+        StoreFiles.scan(spark, s"$path/bands"), "doc_id")
       .select(col("doc_id").as("index_doc"), col("band"), col("bucket"))
       .join(iL, "index_doc")
     val agree = lanes.map(l =>

@@ -105,11 +105,11 @@ object FingerprintIndex {
     * selected by NAME so a schema-order drift across store versions
     * fails loudly (missing column) instead of silently swapping the
     * radius and the fan-out. */
-  private[ops] def readMeta(spark: SparkSession, path: String): (Int, Int) = {
-    val m = spark.read.parquet(s"$path/meta")
-      .select("max_hamming", "pfx_buckets").head()
-    (m.getInt(0), m.getInt(1))
-  }
+  private[ops] def readMeta(spark: SparkSession, path: String): (Int, Int) =
+    StoreFiles.sidecar(spark, s"$path/meta") { df =>
+      val m = df.select("max_hamming", "pfx_buckets").head()
+      (m.getInt(0), m.getInt(1))
+    }
 
   /** Build + persist the fingerprint index: one signature scan feeds
     * both tables. `maxHamming` is the radius the store serves —
@@ -206,7 +206,7 @@ object FingerprintIndex {
       keepFrom: Long): Unit = {
     def fold(dir: String, inner: Option[String]): Unit =
       StoreFiles.replaceDir(spark, dir) { tmp =>
-        val all = spark.read.parquet(dir)
+        val all = StoreFiles.scan(spark, dir)
         val out = all.filter(col("batch_id") < keepFrom).drop("batch_id")
           .withColumn("batch_id", lit(-1L))
           .unionByName(all.filter(col("batch_id") >= keepFrom))
@@ -269,12 +269,6 @@ object FingerprintIndex {
     ids.select(id.cast("long").as("doc_id")).distinct()
       .write.mode("append").parquet(s"$path/tombstones")
 
-  private def dropTombstoned(spark: SparkSession, path: String,
-      rows: DataFrame): DataFrame =
-    if (!StoreFiles.exists(spark, s"$path/tombstones")) rows
-    else rows.join(spark.read.parquet(s"$path/tombstones"),
-      Seq("doc_id"), "left_anti")
-
   /** Compact: physically drop tombstoned rows from both tables,
     * collapse the small files appends left per partition, clear the
     * sidecar. Probe results unchanged; probe cost drops (no anti-join,
@@ -312,7 +306,8 @@ object FingerprintIndex {
       attrF.fold(df)(a => df.join(a, Seq("doc_id"), "left"))
     StoreFiles.replaceDir(spark, s"$path/sigs") { tmp =>
       val live = withAttrs(
-        dropTombstoned(spark, path, spark.read.parquet(s"$path/sigs")))
+        StoreFiles.dropTombstoned(spark, path,
+          StoreFiles.scan(spark, s"$path/sigs"), "doc_id"))
       val out = live
         .repartition(spark.sessionState.conf.numShufflePartitions)
       if (live.columns.contains("batch_id"))
@@ -321,7 +316,8 @@ object FingerprintIndex {
     }
     StoreFiles.replaceDir(spark, s"$path/bands") { tmp =>
       val live = withAttrs(
-        dropTombstoned(spark, path, spark.read.parquet(s"$path/bands")))
+        StoreFiles.dropTombstoned(spark, path,
+          StoreFiles.scan(spark, s"$path/bands"), "doc_id"))
       val out = live.repartition(col("bpfx"))
         .sortWithinPartitions(col("block_idx"), col("block_val"))
       if (live.columns.contains("batch_id"))
@@ -359,10 +355,10 @@ object FingerprintIndex {
         pmod(col("block_val"), lit(pfxBuckets.toLong)).cast("int"))
     val pfxs = bBands.select(col("bpfx")).distinct()
       .collect().map(_.getInt(0)).toIndexedSeq
-    val stored = dropTombstoned(spark, path,
+    val stored = StoreFiles.dropTombstoned(spark, path,
       attrFilter.foldLeft(
-          spark.read.parquet(s"$path/bands")
-            .filter(col("bpfx").isin(pfxs: _*)))(_.filter(_)))
+          StoreFiles.scan(spark, s"$path/bands")
+            .filter(col("bpfx").isin(pfxs: _*)))(_.filter(_)), "doc_id")
     stored.as("i")
       .join(bBands.as("b"),
         col("i.block_idx") === col("b.block_idx") &&
@@ -427,9 +423,4 @@ object FingerprintIndex {
     batch.join(dupIds,
       id.cast("long") === col("batch_doc"), "left_anti")
   }
-
-  /** The stored signatures (doc_id, sh, attrs…), tombstones dropped —
-    * the audit/rebuild read surface. */
-  def readSignatures(spark: SparkSession, path: String): DataFrame =
-    dropTombstoned(spark, path, spark.read.parquet(s"$path/sigs"))
 }

@@ -310,7 +310,7 @@ object LexIndex {
         fold: DataFrame => DataFrame): Unit =
       if (StoreFiles.exists(spark, s"$path/$name"))
         StoreFiles.replaceDir(spark, s"$path/$name") { tmp =>
-          val all = spark.read.parquet(s"$path/$name")
+          val all = StoreFiles.scan(spark, s"$path/$name")
           fold(all.filter(col("batch_id") < keepFrom).drop("batch_id"))
             .withColumn("batch_id", lit(-1L))
             .unionByName(all.filter(col("batch_id") >= keepFrom))
@@ -324,7 +324,7 @@ object LexIndex {
     sub("positions", Seq("batch_id", "tpfx"), identity)
     if (StoreFiles.exists(spark, s"$path/stats"))
       StoreFiles.replaceDir(spark, s"$path/stats") { tmp =>
-        val all = spark.read.parquet(s"$path/stats")
+        val all = StoreFiles.scan(spark, s"$path/stats")
         all.filter(col("batch_id") < keepFrom)
           .agg(sum(col("n_docs")).as("n_docs"),
             sum(col("total_dl")).as("total_dl"))
@@ -387,17 +387,15 @@ object LexIndex {
   private def dfSnapshot(spark: SparkSession, path: String,
       terms: DataFrame, pfxs: Seq[String]): Map[String, Long] =
     (if (StoreFiles.exists(spark, s"$path/df"))
-       spark.read.parquet(s"$path/df")
+       StoreFiles.scan(spark, s"$path/df")
          .filter(col("tpfx").isin(pfxs: _*))
          .join(broadcast(terms.distinct()), Seq("term"))
          .groupBy(col("term")).agg(sum(col("df")).as("df"))
      else {
-       val p0 = spark.read.parquet(s"$path/postings")
+       val p0 = StoreFiles.scan(spark, s"$path/postings")
          .filter(col("tpfx").isin(pfxs: _*))
          .join(broadcast(terms.distinct()), Seq("term"))
-       val p = if (!StoreFiles.exists(spark, s"$path/tombstones")) p0
-         else p0.join(spark.read.parquet(s"$path/tombstones"),
-           Seq("doc_id"), "left_anti")
+       val p = StoreFiles.dropTombstoned(spark, path, p0, "doc_id")
        p.groupBy(col("term")).agg(count(lit(1)).as("df"))
      })
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
@@ -408,12 +406,30 @@ object LexIndex {
     * partials [[deleteFromBm25Index]] appends (sums are associative in
     * both directions). */
   def readStats(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/stats")
-      .agg(sum(col("n_docs")).as("n_docs"),
+    mergeStats(StoreFiles.scan(spark, s"$path/stats"))
+
+  private def mergeStats(stats: DataFrame): DataFrame =
+    stats.agg(sum(col("n_docs")).as("n_docs"),
         sum(col("total_dl")).as("total_dl"))
       .select(col("n_docs"),
         (col("total_dl").cast("double") / col("n_docs").cast("double"))
           .as("avgdl"))
+
+  /** One posting row's BM25 contribution, given its term's `df` column:
+    * the store's [[readStats]] row is decoded once per stamp of
+    * `stats/` and bound as literals, so a probe runs no stats job. */
+  private def bm25Contrib(spark: SparkSession, path: String, k1: Double,
+      b: Double): Column = {
+    val st = StoreFiles.sidecar(spark, s"$path/stats")(mergeStats(_).head())
+    val nDocs = lit(st.get(0)).cast("long")
+    val avgdl = lit(st.get(1)).cast("double")
+    val idf = log(lit(1.0) +
+      (nDocs.cast("double") - col("df") + lit(0.5)) /
+        (col("df") + lit(0.5)))
+    idf * col("tf").cast("double") * lit(k1 + 1.0) /
+      (col("tf").cast("double") + lit(k1) *
+        (lit(1.0 - b) + lit(b) * col("dl").cast("double") / avgdl))
+  }
 
   /** Tombstone-delete documents from the index. Three sidecar writes,
     * no posting rewrite: the doc ids land in `<path>/tombstones/`
@@ -434,12 +450,10 @@ object LexIndex {
   def deleteFromBm25Index(spark: SparkSession, path: String,
       ids: DataFrame, id: Column): Unit = {
     val del0 = ids.select(id.as("doc_id")).distinct()
-    val del = (if (StoreFiles.exists(spark, s"$path/tombstones"))
-        del0.join(spark.read.parquet(s"$path/tombstones"),
-          Seq("doc_id"), "left_anti")
-      else del0).localCheckpoint()
+    val del = StoreFiles.dropTombstoned(spark, path, del0, "doc_id")
+      .localCheckpoint()
     // one postings read serves all three writes below
-    val deadPost = spark.read.parquet(s"$path/postings")
+    val deadPost = StoreFiles.scan(spark, s"$path/postings")
       .select(col("term"), col("tpfx"), col("doc_id"), col("dl"))
       .join(del, Seq("doc_id"), "left_semi")
       .localCheckpoint()
@@ -458,7 +472,7 @@ object LexIndex {
     // under the reserved batch_id = -2 partition (never a batch id, so
     // replays and folds can't collide with it)
     val batchKeyed =
-      spark.read.parquet(s"$path/stats").columns.contains("batch_id")
+      StoreFiles.scan(spark, s"$path/stats").columns.contains("batch_id")
     // repartition by tpfx so the partitioned write lands one file per
     // touched prefix, not one per (task × prefix); a legacy store
     // without df/ never grows one (negatives alone would be nonsense)
@@ -509,7 +523,6 @@ object LexIndex {
     * fail every non-null-safe attrFilter, so cover the corpus. */
   def compactBm25Index(spark: SparkSession, path: String,
       backfillAttrs: Option[DataFrame] = None): Unit = {
-    val hasTombs = StoreFiles.exists(spark, s"$path/tombstones")
     val attrF = backfillAttrs.map { a =>
       require(a.columns.contains("doc_id"),
         "backfillAttrs needs a doc_id join column")
@@ -530,10 +543,8 @@ object LexIndex {
     def prefixSub(name: String): Unit =
       if (StoreFiles.exists(spark, s"$path/$name"))
         StoreFiles.replaceDir(spark, s"$path/$name") { tmp =>
-          val live0 = spark.read.parquet(s"$path/$name")
-          val live1 = if (!hasTombs) live0
-            else live0.join(spark.read.parquet(s"$path/tombstones"),
-              Seq("doc_id"), "left_anti")
+          val live0 = StoreFiles.scan(spark, s"$path/$name")
+          val live1 = StoreFiles.dropTombstoned(spark, path, live0, "doc_id")
           val live = attrF.fold(live1)(a =>
             live1.join(a, Seq("doc_id"), "left"))
           // batch-keyed stores keep their layout (everything folds to
@@ -557,7 +568,7 @@ object LexIndex {
     // fallback. Costs one extra aggregation over postings compaction
     // already rewrote.
     StoreFiles.replaceDir(spark, s"$path/df") { tmp =>
-      val live = spark.read.parquet(s"$path/postings")
+      val live = StoreFiles.scan(spark, s"$path/postings")
       val fresh = dfOf(live.select(col("term"), col("tpfx")))
       if (live.columns.contains("batch_id"))
         fresh.withColumn("batch_id", lit(-1L))
@@ -567,7 +578,7 @@ object LexIndex {
         .write.partitionBy("tpfx").parquet(tmp)
     }
     StoreFiles.replaceDir(spark, s"$path/stats") { tmp =>
-      val all = spark.read.parquet(s"$path/stats")
+      val all = StoreFiles.scan(spark, s"$path/stats")
       val folded = all
         .agg(sum(col("n_docs")).as("n_docs"),
           sum(col("total_dl")).as("total_dl"))
@@ -589,7 +600,7 @@ object LexIndex {
     * on the postings read, so a probe touches only the directories its
     * own terms name; df broadcast-joins in from the lifecycle-maintained
     * `df/` sidecar (never recomputed — see [[withDf]]), the one-row
-    * stats sidecar broadcasts, and the top-k is a TakeOrdered over
+    * stats sidecar binds as literals, and the top-k is a TakeOrdered over
     * match-bounded rows. Nothing corpus-sized is read or shuffled, and
     * no per-term shuffle exists for a skewed term to serialize.
     *
@@ -608,21 +619,13 @@ object LexIndex {
       .localCheckpoint(eager = false)
     val pfxs = tq.select(col("tpfx")).distinct().collect()
       .map(_.getString(0)).toSeq
-    val post0 = spark.read.parquet(s"$path/postings")
+    val post0 = StoreFiles.scan(spark, s"$path/postings")
       .filter(col("tpfx").isin(pfxs: _*))
       .join(broadcast(tq.select(col("term"))), Seq("term"))
     // tombstoned docs drop BEFORE the df window, so both df and the
     // scored set equal a from-scratch build without the deleted docs
-    val post = if (!StoreFiles.exists(spark, s"$path/tombstones")) post0
-      else post0.join(spark.read.parquet(s"$path/tombstones"),
-        Seq("doc_id"), "left_anti")
-    val stats = readStats(spark, path)
-    val idf = log(lit(1.0) +
-      (col("n_docs").cast("double") - col("df") + lit(0.5)) /
-        (col("df") + lit(0.5)))
-    val contrib = idf * col("tf").cast("double") * lit(k1 + 1.0) /
-      (col("tf").cast("double") + lit(k1) *
-        (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
+    val post = StoreFiles.dropTombstoned(spark, path, post0, "doc_id")
+    val contrib = bm25Contrib(spark, path, k1, b)
     // attrFilter (over writeBm25Index `attrs` columns) restricts the
     // CANDIDATE documents — applied ABOVE the df derivation so idf
     // stays GLOBAL on EVERY layout: with the sidecar df is corpus-wide
@@ -635,7 +638,6 @@ object LexIndex {
     attrFilter
       .foldLeft(withDf(spark, path, post, tq.select(col("term")), pfxs))(
         _.filter(_))
-      .crossJoin(broadcast(stats))
       .select(col("doc_id"),
         floor(contrib * lit(10000.0)).cast("long").as("c_e4"))
       .groupBy(col("doc_id"))
@@ -677,19 +679,11 @@ object LexIndex {
       .localCheckpoint(eager = false)
     val pfxs = tq.select(col("tpfx")).distinct().collect()
       .map(_.getString(0)).toSeq
-    val post0 = spark.read.parquet(s"$path/postings")
+    val post0 = StoreFiles.scan(spark, s"$path/postings")
       .filter(col("tpfx").isin(pfxs: _*))
       .join(broadcast(tq.select(col("term"))), Seq("term"))
-    val post = if (!StoreFiles.exists(spark, s"$path/tombstones")) post0
-      else post0.join(spark.read.parquet(s"$path/tombstones"),
-        Seq("doc_id"), "left_anti")
-    val stats = readStats(spark, path)
-    val idf = log(lit(1.0) +
-      (col("n_docs").cast("double") - col("df") + lit(0.5)) /
-        (col("df") + lit(0.5)))
-    val contrib = idf * col("tf").cast("double") * lit(k1 + 1.0) /
-      (col("tf").cast("double") + lit(k1) *
-        (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
+    val post = StoreFiles.dropTombstoned(spark, path, post0, "doc_id")
+    val contrib = bm25Contrib(spark, path, k1, b)
     // candidate docs restricted ABOVE the df derivation, global idf on
     // every layout — the [[bm25TopKIndexed]] attrFilter contract for
     // the whole batch (pushdown still reaches the pruned scan through
@@ -697,7 +691,6 @@ object LexIndex {
     attrFilter
       .foldLeft(withDf(spark, path, post, tq.select(col("term")), pfxs))(
         _.filter(_))
-      .crossJoin(broadcast(stats))
       .select(col("term"), col("doc_id"),
         floor(contrib * lit(10000.0)).cast("long").as("c_e4"))
       .join(broadcast(qt), Seq("term"))
@@ -766,12 +759,10 @@ object LexIndex {
     // position rows too) restricts candidate docs in the SAME pruned
     // scan; the anchor df stays global — a performance choice only
     val pos0 = attrFilter
-      .foldLeft(spark.read.parquet(s"$path/positions"))(_.filter(_))
+      .foldLeft(StoreFiles.scan(spark, s"$path/positions"))(_.filter(_))
       .filter(col("tpfx").isin(pfxs: _*))
       .join(broadcast(ph.select(col("term"), col("off"))), Seq("term"))
-    val pos = if (!StoreFiles.exists(spark, s"$path/tombstones")) pos0
-      else pos0.join(spark.read.parquet(s"$path/tombstones"),
-        Seq("doc_id"), "left_anti")
+    val pos = StoreFiles.dropTombstoned(spark, path, pos0, "doc_id")
     val shifted = pos.select(col("doc_id"),
       (col("pos") - col("off")).as("start"), col("off"))
     // the rare term IS the off === rareOff row set: ph maps each
@@ -863,13 +854,11 @@ object LexIndex {
       .toDF("query_id", "phlen")
       .localCheckpoint(eager = false)
     val pos0 = attrFilter
-      .foldLeft(spark.read.parquet(s"$path/positions"))(_.filter(_))
+      .foldLeft(StoreFiles.scan(spark, s"$path/positions"))(_.filter(_))
       .filter(col("tpfx").isin(pfxs: _*))
       .join(broadcast(ph.select(col("query_id"), col("term"),
         col("off"))), Seq("term"))
-    val pos = if (!StoreFiles.exists(spark, s"$path/tombstones")) pos0
-      else pos0.join(spark.read.parquet(s"$path/tombstones"),
-        Seq("doc_id"), "left_anti")
+    val pos = StoreFiles.dropTombstoned(spark, path, pos0, "doc_id")
     val shifted = pos.select(col("query_id"), col("doc_id"),
       (col("pos") - col("off")).as("start"), col("off"))
     // each (query, off) names exactly one term, so filtering by the

@@ -222,8 +222,7 @@ object ScaleProbe {
     * pair volume, cluster count and map size all scale ×replicas while
     * per-family work is unchanged. Measures the write side (pair join +
     * min-label rounds), the star variant over the STORED pairs, and the
-    * two probe-side joins; run with SPARK_GRAFT_TRACE=1 to count
-    * propagation/contraction rounds on stderr. */
+    * two probe-side joins. */
   private def clusterFamily(spark: SparkSession, sfDir: String,
       replicas: Int): Unit = {
     val base = graft.Tables.load(spark, sfDir, "documents")

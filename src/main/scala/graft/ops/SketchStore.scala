@@ -65,7 +65,7 @@ object SketchStore {
     val partials = hllPartials(batch, group, value).localCheckpoint()
     if (StoreFiles.exists(spark, s"$path/hll_tombstones")) {
       val clash = partials
-        .join(spark.read.parquet(s"$path/hll_tombstones"), Seq("grp"),
+        .join(StoreFiles.scan(spark, s"$path/hll_tombstones"), Seq("grp"),
           "left_semi")
         .select(col("grp")).limit(1).collect()
       require(clash.isEmpty,
@@ -98,12 +98,12 @@ object SketchStore {
 
   private def liveHllPartials(spark: SparkSession,
       path: String): DataFrame =
-    liveHllPartials(spark, path, spark.read.parquet(s"$path/hll"))
+    liveHllPartials(spark, path, StoreFiles.scan(spark, s"$path/hll"))
 
   private def liveHllPartials(spark: SparkSession, path: String,
       all: DataFrame): DataFrame =
     if (!StoreFiles.exists(spark, s"$path/hll_tombstones")) all
-    else all.join(spark.read.parquet(s"$path/hll_tombstones"),
+    else all.join(StoreFiles.scan(spark, s"$path/hll_tombstones"),
       Seq("grp"), "left_anti")
 
   /** Tombstone-delete whole GROUPS from the HLL half: register arrays
@@ -140,12 +140,12 @@ object SketchStore {
 
   /** The store's counter width (from the sidecar). */
   def cmsWidth(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/cms_meta").head().getInt(0)
+    StoreFiles.sidecar(spark, s"$path/cms_meta")(_.head().getInt(0))
 
   /** Merged counters over ALL stored partials — counter-wise equal to
     * sketching the union corpus directly (CMS merges by sum). */
   def readCms(spark: SparkSession, path: String): DataFrame =
-    Sketches.cmsMergeSketches(spark.read.parquet(s"$path/cms"))
+    Sketches.cmsMergeSketches(StoreFiles.scan(spark, s"$path/cms"))
 
   /** Point-estimate probe counts against the merged store (probes are
     * never shuffled; the merged sketch is ≤ 4×width rows, broadcast). */
@@ -174,7 +174,7 @@ object SketchStore {
   /** Merged counters over ALL stored partials — counter-wise equal to
     * sketching the union corpus directly. */
   def readHist(spark: SparkSession, path: String): DataFrame =
-    Sketches.histMergeSketches(spark.read.parquet(s"$path/hist"))
+    Sketches.histMergeSketches(StoreFiles.scan(spark, s"$path/hist"))
 
   /** Merged per-group quantile profile over all stored partials —
     * identical to [[Sketches.histQuantiles]] over the union's sketch,
@@ -214,7 +214,8 @@ object SketchStore {
     * partitioned directory would corrupt it into a mixed layout. */
   private def appendNegPartial(sketch: DataFrame, dir: String): Unit = {
     val neg = sketch.withColumn("cnt", -col("cnt"))
-    if (sketch.sparkSession.read.parquet(dir).columns.contains("batch_id"))
+    if (StoreFiles.scan(sketch.sparkSession, dir).columns
+        .contains("batch_id"))
       neg.withColumn("batch_id", lit(-2L))
         .write.mode("append").partitionBy("batch_id").parquet(dir)
     else neg.write.mode("append").parquet(dir)
@@ -266,7 +267,7 @@ object SketchStore {
         fold: DataFrame => DataFrame): Unit =
       if (StoreFiles.exists(spark, s"$path/$name"))
         StoreFiles.replaceDir(spark, s"$path/$name") { tmp =>
-          val all = pre(spark.read.parquet(s"$path/$name"))
+          val all = pre(StoreFiles.scan(spark, s"$path/$name"))
           val keyed = all.columns.contains("batch_id")
           write(fold(if (keyed) all.drop("batch_id") else all), keyed, tmp)
         }
@@ -339,7 +340,7 @@ object SketchStore {
     def sub(name: String)(fold: DataFrame => DataFrame): Unit =
       if (StoreFiles.exists(spark, s"$path/$name"))
         StoreFiles.replaceDir(spark, s"$path/$name") { tmp =>
-          val all = spark.read.parquet(s"$path/$name")
+          val all = StoreFiles.scan(spark, s"$path/$name")
           fold(all.filter(col("batch_id") < keepFrom).drop("batch_id"))
             .withColumn("batch_id", lit(-1L))
             .unionByName(all.filter(col("batch_id") >= keepFrom))

@@ -1,10 +1,15 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
 
-/** Filesystem plumbing shared by the persisted stores' compaction and
-  * tombstone lifecycle ([[SketchStore]], [[LexIndex]], [[DedupIndex]]).
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+/** Filesystem plumbing shared by the persisted stores ([[AnnIndex]],
+  * [[LexIndex]], [[FingerprintIndex]], [[DedupIndex]], [[SketchStore]]):
+  * their reads ([[scan]], [[sidecar]]), the tombstone anti-join, and the
+  * compaction lifecycle.
   *
   * Compaction uses rewrite-then-rename replacement: the folded row-set
   * is written to a temp sibling while the live directory keeps serving
@@ -17,7 +22,34 @@ import org.apache.spark.sql.SparkSession
   * maintains are sketch/posting/fingerprint tables — orders of
   * magnitude smaller than the corpus — so the rewrite is cheap
   * relative to what merged reads save once per-batch partials stop
-  * accumulating. */
+  * accumulating.
+  *
+  * Reads resolve once per STAMP. A plain `spark.read.parquet(dir)`
+  * launches a Spark job to infer the schema from a footer, and a
+  * small collected sidecar (model centroids, a codebook, a `meta` row, the
+  * generation pointer) costs one more job to collect values that
+  * rarely change; a probe used to pay both before it read a row. A
+  * directory's stamp is its (modification time, sorted top-level entry
+  * names) — one `getFileStatus` plus one `listStatus` — and every write
+  * the stores make moves it:
+  *   - a Spark write job into `dir` (append, overwrite, dynamic
+  *     partition overwrite) creates and deletes its `_temporary` or
+  *     staging directory there, which moves the directory's mtime, also
+  *     when the files land in partition directories that already exist;
+  *   - an unpartitioned write also adds uniquely named part files;
+  *   - [[replaceDir]] and [[delete]] swap or remove the whole directory,
+  *     and a re-created one has a later mtime and new part-file names.
+  * This relies on the filesystem keeping directory modification times,
+  * as HDFS and local filesystems do.
+  * [[scan]] reuses the schema Spark inferred at the current stamp and
+  * [[sidecar]] the value it decoded; a missing directory has no stamp,
+  * so it is never memoized and reads (and fails) as a plain read.
+  * Frames are NOT shared: every [[scan]] builds a fresh relation with
+  * its own file listing and attribute ids; only the schema is reused.
+  * Decoded sidecar values ARE shared, so callers must not mutate them.
+  * The memos are process-wide, keyed by the directory string as given,
+  * and dropped whole past `MemoCap` entries, so a process that touches
+  * many short-lived stores holds bounded memory. */
 private[graft] object StoreFiles {
 
   private def fs(spark: SparkSession, dir: String) =
@@ -28,6 +60,78 @@ private[graft] object StoreFiles {
 
   def delete(spark: SparkSession, dir: String): Unit =
     fs(spark, dir).delete(new Path(dir), true)
+
+  private final case class Stamp(mtime: Long, names: Seq[String])
+
+  private def stamp(spark: SparkSession, dir: String): Option[Stamp] = {
+    val f = fs(spark, dir)
+    val p = new Path(dir)
+    try {
+      val mtime = f.getFileStatus(p).getModificationTime
+      Some(Stamp(mtime,
+        f.listStatus(p).map(_.getPath.getName).sorted.toIndexedSeq))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  private val MemoCap = 4096
+  private val schemas = new ConcurrentHashMap[String, (Stamp, StructType)]()
+  private val decoded =
+    new ConcurrentHashMap[(String, Class[_]), (Stamp, Any)]()
+
+  private def remember[K, V](m: ConcurrentHashMap[K, (Stamp, V)], k: K,
+      s: Stamp, v: V): Unit = {
+    if (m.size >= MemoCap) m.clear()
+    m.put(k, (s, v))
+  }
+
+  private def scanAt(spark: SparkSession, dir: String,
+      s: Stamp): DataFrame = {
+    val hit = schemas.get(dir)
+    if (hit != null && hit._1 == s) spark.read.schema(hit._2).parquet(dir)
+    else {
+      val df = spark.read.parquet(dir)
+      remember(schemas, dir, s, df.schema)
+      df
+    }
+  }
+
+  /** `spark.read.parquet(dir)`, with the schema Spark inferred the last
+    * time `dir` had its current stamp — no footer-inference job while
+    * the directory is unchanged. Each call returns a fresh frame; a
+    * missing directory reads (and fails) as a plain read. */
+  def scan(spark: SparkSession, dir: String): DataFrame =
+    stamp(spark, dir).fold(spark.read.parquet(dir))(scanAt(spark, dir, _))
+
+  /** `decode` applied to [[scan]]`(dir)`, run once per stamp: while
+    * `dir` is unchanged, later calls return the value decoded before,
+    * with no Spark job. The memo is keyed by `dir` and the decoder's
+    * class, so each call site keeps its own value; `decode` must depend
+    * on the rows alone (capture nothing that varies between calls). The
+    * value is shared — do not mutate it. */
+  def sidecar[T](spark: SparkSession, dir: String)(
+      decode: DataFrame => T): T =
+    stamp(spark, dir) match {
+      case None => decode(spark.read.parquet(dir))
+      case Some(s) =>
+        val key = (dir, decode.getClass)
+        val hit = decoded.get(key)
+        if (hit != null && hit._1 == s) hit._2.asInstanceOf[T]
+        else {
+          val v = decode(scanAt(spark, dir, s))
+          remember(decoded, key, s, v)
+          v
+        }
+    }
+
+  /** `rows` minus those whose `key` is in `<root>/tombstones` — the
+    * tombstone anti-join every store family applies before it serves or
+    * folds rows. A store with no tombstones returns `rows` as is. */
+  def dropTombstoned(spark: SparkSession, root: String, rows: DataFrame,
+      key: String): DataFrame = {
+    val dir = s"$root/tombstones"
+    stamp(spark, dir).fold(rows)(s =>
+      rows.join(scanAt(spark, dir, s), Seq(key), "left_anti"))
+  }
 
   /** Replace `dir` with whatever `write` produces at a temp sibling.
     * `write` runs while the old directory still exists, so folds that

@@ -149,18 +149,6 @@ object TextAnalysis {
 
   def bpeTokenCount(text: Column): Column = size(bpeTokens(text))
 
-  /** k-shingle rolling hashes as a per-row array: one xxhash64 per
-    * k-token window. Stays inside the row — no explode, no shuffle. */
-  def shingleHashArray(text: Column, k: Int): Column = {
-    val toks = tokens(text)
-    when(size(toks) >= k,
-      transform(sequence(lit(0), size(toks) - k),
-        i => xxhash64(concat_ws(" ", slice(toks, i + 1, lit(k))))))
-      .otherwise(when(size(toks) > 0,
-        array(xxhash64(concat_ws(" ", toks))))
-        .otherwise(array().cast("array<bigint>")))
-  }
-
   /** Winnowing signature (Schleimer et al.): the minimum shingle hash
     * per window of `w` consecutive shingles; documents sharing any
     * selected fingerprint are near-dup candidates. One native codegen'd

@@ -31,10 +31,4 @@ object Versioning {
           .when(col("old_fp") === col("new_fp"), "same")
           .otherwise("changed").as("status"))
   }
-
-  /** Diff summary: status → count (the dashboard row). */
-  def diffSummary(oldDocs: DataFrame, newDocs: DataFrame, id: Column,
-      text: Column): DataFrame =
-    corpusDiff(oldDocs, newDocs, id, text)
-      .groupBy(col("status")).agg(count(lit(1)).as("n_docs"))
 }

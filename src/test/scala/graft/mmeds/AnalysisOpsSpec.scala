@@ -119,4 +119,33 @@ class AnalysisOpsSpec extends AnyFunSuite {
     // specimen 20 has none -> starts at 0
     assert(ids(2)._4 == "S20-Aliquot0")
   }
+
+  test("per-study ID export: only the named study, unsampled aliquots keep a null SampleID") {
+    val cat = new InMemoryCatalog
+    cat.overwrite("Study", Seq((1L, "S1"), (2L, "S2"))
+      .toDF("idStudy", "StudyName"))
+    cat.overwrite("Experiment", Seq((11L, 1L), (12L, 2L))
+      .toDF("idExperiment", "Study_idStudy"))
+    cat.overwrite("Specimen",
+      Seq((21L, "SP1", 11L), (22L, "SP2", 12L), (23L, "SP3", 11L))
+        .toDF("idSpecimen", "SpecimenID", "Experiment_idExperiment"))
+    cat.overwrite("Aliquot",
+      Seq((31L, "A1", 21L), (32L, "A2", 21L), (33L, "A3", 22L),
+        (34L, "A4", 23L))
+        .toDF("idAliquot", "AliquotID", "Specimen_idSpecimen"))
+    cat.overwrite("Sample",
+      Seq((41L, "SA1", 31L), (42L, "SA2", 31L), (43L, "SA3", 33L))
+        .toDF("idSample", "SampleID", "Aliquot_idAliquot"))
+    val got = IdGen.idsForStudy(cat, "S1")
+    assert(got.columns.toSeq ==
+      Seq("StudyName", "SpecimenID", "AliquotID", "SampleID"))
+    val rows = got.collect().map(r => (r.getString(0), r.getString(1),
+        r.getString(2), Option(r.getString(3))))
+      .sortBy(t => (t._2, t._3, t._4.getOrElse(""))).toSeq
+    assert(rows == Seq(
+      ("S1", "SP1", "A1", Some("SA1")),
+      ("S1", "SP1", "A1", Some("SA2")),
+      ("S1", "SP1", "A2", None),
+      ("S1", "SP3", "A4", None)))
+  }
 }
